@@ -1,9 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import java.nio.file.{Files, Paths}
 import java.util.concurrent.atomic.AtomicLong
+import graft.core.Env
+import graft.ops.Leaks
 
+/** The one timing harness, in four modes (query names filtered by
+  * SPARK_GRAFT_BENCH_FILTER, all settings in [[graft.core.Env]]):
+  *
+  *   runMain graft.Bench                      catalog timing → one JSON line
+  *                                            on stdout + bench_full.json
+  *   runMain graft.Bench iso                  per query: a cold run, then
+  *                                            SPARK_GRAFT_BENCH_ITERS warm ones
+  *   runMain graft.Bench trace                iso, plus per-stage wall lines
+  *   runMain graft.Bench plans [dir suffix]   formatted physical plans →
+  *                                            PLANS.md, or dir/<q>_suffix.txt
+  */
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
 
   /** Accumulates task-level shuffle/spill totals; reset per query so
     * bench_full.json can report measured shuffle volume per query (the
@@ -16,7 +31,10 @@ object Bench {
     * query's wall multiplies with per-job scheduler latency), summed GC
     * time across tasks (pause bursts), and summed executor run time
     * (task-side CPU-seconds — if wall inflates while this stays flat,
-    * the time went to scheduling/queueing, not compute). */
+    * the time went to scheduling/queueing, not compute).
+    *
+    * Also keeps one line per completed stage over 50 ms, which the trace
+    * mode prints. */
   private class MetricsListener extends SparkListener {
     val shuffleRead = new AtomicLong
     val shuffleWrite = new AtomicLong
@@ -28,6 +46,7 @@ object Bench {
     val jobs = new AtomicLong
     val gcMs = new AtomicLong
     val execRunMs = new AtomicLong
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     override def onJobStart(j: SparkListenerJobStart): Unit = {
       jobs.incrementAndGet(); ()
     }
@@ -43,10 +62,24 @@ object Bench {
         execRunMs.addAndGet(m.executorRunTime)
       }
     }
+    override def onStageCompleted(s: SparkListenerStageCompleted): Unit = {
+      val i = s.stageInfo
+      val wall = (i.completionTime.getOrElse(0L) -
+        i.submissionTime.getOrElse(0L)) / 1000.0
+      val m = i.taskMetrics
+      if (wall > 0.05)
+        stages.add(f"    stage ${i.stageId}%4d $wall%7.2f s " +
+          f"tasks=${i.numTasks}%4d run=${m.executorRunTime / 1000.0}%6.2f " +
+          f"cpu=${m.executorCpuTime / 1e9}%6.2f " +
+          f"deser=${m.executorDeserializeTime / 1000.0}%6.2f " +
+          f"gc=${m.jvmGCTime / 1000.0}%5.2f ${i.name.take(40)}")
+    }
     def reset(): Unit = {
       shuffleRead.set(0); shuffleWrite.set(0); spill.set(0); memPeak.set(0)
-      jobs.set(0); gcMs.set(0); execRunMs.set(0)
+      jobs.set(0); gcMs.set(0); execRunMs.set(0); stages.clear()
     }
+    def counters = (shuffleRead.get, shuffleWrite.get, spill.get,
+      memPeak.get, jobs.get, gcMs.get, execRunMs.get)
   }
 
   /** Listener events are delivered async; drain before snapshotting so a
@@ -64,28 +97,120 @@ object Bench {
       else m.invoke(bus, java.lang.Long.valueOf(10000L))
     } catch { case _: Throwable => Thread.sleep(200) }
 
+  private val Usage =
+    "usage: graft.Bench [iso | trace | plans [<outDir> <suffix>]]"
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // sized to data past sf1 (graft.core.Sizing — 128 MiB of expanded
-      // input per partition, clamped to cores; sf0.1 resolves to the
-      // core count, so harness timings are untouched); env overrides
-      .config("spark.sql.shuffle.partitions",
-        graft.core.Sizing.shufflePartitions(sfDir, cpus.toInt))
-      // shuffle scratch override only (SPARK_GRAFT_LOCAL_DIR; Sizing.localDir doc)
-      .config(graft.core.Sizing.localDir(sfDir).map("spark.local.dir" -> _).toMap)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val env = Env.orExit()
+    args.toList match {
+      case Nil => time(env)
+      case "iso" :: Nil => isolated(env, trace = false)
+      case "trace" :: Nil => isolated(env, trace = true)
+      case "plans" :: Nil => plans(env, None)
+      case "plans" :: dir :: suffix :: Nil => plans(env, Some(dir -> suffix))
+      case _ =>
+        System.err.println(Usage)
+        sys.exit(2)
+    }
+  }
+
+  /** Timing session over the bench sf dir (sized to data past sf1 —
+    * graft.core.Sizing; sf0.1 resolves to the core count), with the
+    * listener attached and the JVM/codegen/parquet-reader warmed up
+    * outside any timed region. */
+  private def timingSession(env: Env)
+  : (SparkSession, String, MetricsListener) = {
+    val sfDir = env.sfDir.getOrElse(s"${Env.TestData}/sf0.1")
+    val spark = GraftSession(Some(env.cpus), Some(sfDir), env.extraConf)
     val listener = new MetricsListener
     spark.sparkContext.addSparkListener(listener)
-    // JVM/codegen/parquet-reader warmup outside the timed loop
     spark.range(1000).selectExpr("sum(id)").collect()
     spark.read.parquet(s"$sfDir/region.parquet").groupBy("r_name").count().collect()
+    (spark, sfDir, listener)
+  }
+
+  /** The queries the filter selects, in catalog order. */
+  private def selected(env: Env): Seq[(String, Query)] =
+    SparkEntry.queries.toSeq.filter(kv => env.selects(kv._1))
+
+  /** One run of a query: wall seconds (-1 when it throws), the listener
+    * counters, and the RDDs it left pinned. Then the sweep: queries are
+    * independent; drop whatever a pipeline pinned — BOTH layers:
+    * clearCache() alone leaves localCheckpoint RDD blocks resident, and
+    * 179 queries of accumulated orphans tax every query that runs later
+    * in the shared JVM (round-4 lesson: per-query times inflated 9-26x
+    * vs isolated measurement). */
+  private def measure(spark: SparkSession, sfDir: String,
+                      listener: MetricsListener, fn: Query)
+  : (Double, (Long, Long, Long, Long, Long, Long, Long), Int) = {
+    drainListenerBus(spark)
+    listener.reset()
+    val t0 = System.nanoTime()
+    val ok = try { fn(spark, sfDir).count(); true }
+             catch { case _: Throwable => false }
+    val dt = (System.nanoTime() - t0) / 1e9
+    drainListenerBus(spark)
+    val pinned = Leaks.persistentRddCount(spark)
+    Leaks.sweep(spark)
+    (if (ok) dt else -1.0, listener.counters, pinned)
+  }
+
+  /** Isolated per-query timing, the way to adjudicate a single bench
+    * regression (round-3 lesson: single-shot JIT noise). The cold run is
+    * timed and reported too: for queries whose fitted parameters are
+    * process-memoized (tournament accuracies, the shared forest model)
+    * the warm runs measure only scoring — cold is the honest
+    * fit-inclusive number. `trace` prints the last warm run's stages. */
+  private def isolated(env: Env, trace: Boolean): Unit = {
+    val (spark, sfDir, listener) = timingSession(env)
+    selected(env).sortBy(_._1).foreach { case (name, fn) =>
+      val (cold, _, pinnedCold) = measure(spark, sfDir, listener, fn)
+      val warm = (1 to env.benchIters).map(_ => measure(spark, sfDir, listener, fn))
+      if (trace) listener.stages.forEach(println)
+      val (best, (_, _, _, _, jobs, _, _), _) = warm.minBy(_._1)
+      println(f"[iso] $name min=$best%.3f cold=$cold%.3f " +
+        s"times=${warm.map(r => f"${r._1}%.2f").mkString(",")} jobs=$jobs " +
+        s"pinned_after_materialize=$pinnedCold " +
+        s"pinned_after_sweep=${Leaks.persistentRddCount(spark)}")
+    }
+    spark.stop()
+  }
+
+  /** Formatted physical plans of the selected queries — the evidence
+    * trail for the plan shapes SCALE.md claims (pushdown, broadcast,
+    * partial aggregation, top-k, no cartesian products). Pinned to
+    * local[8] over sf0.001 by default so the committed PLANS.md does not
+    * depend on the host. Without arguments all sections go to PLANS.md;
+    * with `<outDir> <suffix>` each plan goes to its own
+    * `<outDir>/<query>_<suffix>.txt` (before/after evidence). */
+  private def plans(env: Env, perQuery: Option[(String, String)]): Unit = {
+    val sfDir = env.sfDir.getOrElse(s"${Env.TestData}/sf0.001")
+    val spark = GraftSession(Some(8), Some(sfDir), env.extraConf,
+      logLevel = "ERROR")
+    val all = selected(env).sortBy(_._1).map { case (name, fn) =>
+      val plan =
+        try fn(spark, sfDir).queryExecution.explainString(
+          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+        catch { case e: Throwable => s"PLAN FAILED: ${e.getMessage}\n" }
+      Leaks.sweep(spark)
+      perQuery.foreach { case (dir, suffix) =>
+        Files.createDirectories(Paths.get(dir))
+        Files.writeString(Paths.get(dir, s"${name}_$suffix.txt"), plan)
+      }
+      s"\n## $name\n\n```\n$plan```\n"
+    }
+    if (perQuery.isEmpty) Files.writeString(Paths.get("PLANS.md"),
+      "# PLANS — formatted physical plans of every registered query\n\n" +
+        s"Generated by `graft.Bench plans` over `$sfDir` (plan SHAPE is scale-\n" +
+        "independent: the same operators appear at any input size; only\n" +
+        "AQE's runtime partition numbers change).\n" + all.mkString)
+    spark.stop()
+  }
+
+  /** Catalog timing: the one-line JSON on stdout and bench_full.json. */
+  private def time(env: Env): Unit = {
+    val (spark, sfDir, listener) = timingSession(env)
+    val cpus = env.cpus
     // Fixed-work calibration probe: a constant synthetic aggregation (no
     // I/O, no shuffle, data-independent) timed per run so cross-round
     // wall-clock comparisons can normalize machine-wide drift instead of
@@ -94,7 +219,7 @@ object Bench {
     // JIT/GC-noise discipline as the query loop.
     def calibrationRun(): Double = {
       val t0 = System.nanoTime()
-      spark.range(0L, 1L << 28, 1L, cpus.toInt)
+      spark.range(0L, 1L << 28, 1L, cpus)
         .selectExpr("sum((id * 2654435761) % 1000003)").collect()
       (System.nanoTime() - t0) / 1e9
     }
@@ -108,7 +233,7 @@ object Bench {
     // adjudicates both drift modes without hand-analysis.
     def jobLatencyRun(): Double = {
       val t0 = System.nanoTime()
-      (1 to 10).foreach(_ => spark.range(0L, cpus.toLong, 1L, cpus.toInt)
+      (1 to 10).foreach(_ => spark.range(0L, cpus.toLong, 1L, cpus)
         .selectExpr("count(1)").collect())
       (System.nanoTime() - t0) / 1e9 / 10
     }
@@ -125,35 +250,12 @@ object Bench {
     // n iterations per query, report the MIN: single-shot timings mixed
     // JIT/GC noise into round-3's numbers (9 queries "regressed" 3-9×
     // with no code change); the min of two runs is the stable signal
-    val iterations = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "2").toInt
-    // local-iteration-only name filter (regex), mirroring Verify's 3rd
-    // arg: a focused timing run on a handful of queries without paying
-    // the full catalog
-    val nameFilter = sys.env.get("SPARK_GRAFT_BENCH_FILTER").map(_.r)
-    def keep(name: String) = nameFilter.forall(_.findFirstIn(name).isDefined)
+    val iterations = env.benchIters
     // (time_sec, byte+telemetry counters) per query; the counters come
-    // from the min-time iteration
-    val results = SparkEntry.queries.filter(kv => keep(kv._1)).map { case (name, fn) =>
-      val runs = (1 to iterations).map { _ =>
-        drainListenerBus(spark)
-        listener.reset()
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-                 catch { case _: Throwable => false }
-        val dt = (System.nanoTime() - t0) / 1e9
-        drainListenerBus(spark)
-        val m = (listener.shuffleRead.get, listener.shuffleWrite.get,
-          listener.spill.get, listener.memPeak.get,
-          listener.jobs.get, listener.gcMs.get, listener.execRunMs.get)
-        // queries are independent; drop whatever a pipeline pinned — BOTH
-        // layers: clearCache() alone leaves localCheckpoint RDD blocks
-        // resident, and 179 queries of accumulated orphans tax every
-        // query that runs later in the shared JVM (round-4 lesson:
-        // per-query times inflated 9-26x vs isolated measurement)
-        graft.ops.Leaks.sweep(spark)
-        // a crashed query reports -1 instead of a normal-looking duration
-        (if (ok) dt else -1.0, m)
-      }
+    // from the min-time iteration; a crashed query reports -1 instead of
+    // a normal-looking duration
+    val results = selected(env).toMap.map { case (name, fn) =>
+      val runs = (1 to iterations).map(_ => measure(spark, sfDir, listener, fn))
       val best = runs.minBy(_._1 match { case d if d < 0 => Double.MaxValue; case d => d })
       val t = if (runs.exists(_._1 < 0)) -1.0 else r3(best._1)
       name -> (t, best._2)
@@ -182,7 +284,7 @@ object Bench {
         // idle-consistent) so a spike in a loaded run is adjudicable
         // from the artifact alone — no human cross-reading of three
         // telemetry fields (round-11 judging did this by hand)
-        val bound = BenchGates.bound(t, er, gc, nj, cpus.toInt, jobLatencySec)
+        val bound = BenchGates.bound(t, er, gc, nj, cpus, jobLatencySec)
         s""""$k":{"time":$t,"shuffle_read":$sr,"shuffle_write":$sw,"spill":$sp,"mem_peak":$mp,"jobs":$nj,"gc_ms":$gc,"exec_run_ms":$er,"bound":"$bound"}"""
     }.mkString("{", ",", "}")
     // Budget regression gates: shuffle_budget.json / mem_budget.json hold

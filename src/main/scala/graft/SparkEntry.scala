@@ -18,17 +18,19 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     CoreQueries.queries("q_j2_region_revenue")(spark, "/root/testdata/sf0.001")
 
+  /** Every query pack, in registration order: adding a pack here adds
+    * its queries AND its oracles. Keys are disjoint across packs
+    * (SchemaSpec checks it). */
+  def packs: Seq[QueryPack] = Seq(
+    CoreQueries, StatsQueries, TextSimQueries, StreamQueries, MlQueries,
+    MultimodalQueries, ExtQueries, PipeQueries, R4Queries, TpchPlusQueries,
+    WarehouseQueries, R5Queries, R6Queries, R7Queries, R8Queries, R9Queries,
+    ForestQueries, Ep4Queries, Ep2Queries, R10Queries, BpeQueries,
+    DsirQueries, R11Queries, R12Queries, R13Queries)
+
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
-    CoreQueries.queries ++ StatsQueries.queries ++
-      TextSimQueries.queries ++ StreamQueries.queries ++ MlQueries.queries ++
-      MultimodalQueries.queries ++ ExtQueries.queries ++ PipeQueries.queries ++
-      R4Queries.queries ++ TpchPlusQueries.queries ++
-      WarehouseQueries.queries ++ R5Queries.queries ++ R6Queries.queries ++
-      R7Queries.queries ++ R8Queries.queries ++ R9Queries.queries ++
-      ForestQueries.queries ++ Ep4Queries.queries ++ Ep2Queries.queries ++
-      R10Queries.queries ++ BpeQueries.queries ++ DsirQueries.queries ++
-      R11Queries.queries ++ R12Queries.queries ++ R13Queries.queries
+    packs.flatMap(_.queries).toMap
 
   /** DuckDB 1.0 re-plans and RE-EXECUTES a WITH-clause CTE once per
     * reference unless it is marked AS MATERIALIZED — for the deep
@@ -89,14 +91,6 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys → rows-only check. */
   def oracleSql: Map[String, String] =
-    (CoreQueries.oracles ++ StatsQueries.oracles ++
-      TextSimQueries.oracles ++ StreamQueries.oracles ++ MlQueries.oracles ++
-      MultimodalQueries.oracles ++ ExtQueries.oracles ++ PipeQueries.oracles ++
-      R4Queries.oracles ++ TpchPlusQueries.oracles ++
-      WarehouseQueries.oracles ++ R5Queries.oracles ++ R6Queries.oracles ++
-      R7Queries.oracles ++ R8Queries.oracles ++ R9Queries.oracles ++
-      ForestQueries.oracles ++ Ep4Queries.oracles ++ Ep2Queries.oracles ++
-      R10Queries.oracles ++ BpeQueries.oracles ++ DsirQueries.oracles ++
-      R11Queries.oracles ++ R12Queries.oracles ++ R13Queries.oracles)
+    packs.flatMap(_.oracles).toMap
       .map { case (k, v) => k -> materializeCtes(exactDecimalCasts(v)) }
 }

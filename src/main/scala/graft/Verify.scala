@@ -1,44 +1,29 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.core.Env
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
+    if (args.length < 2 || args.length > 3) {
+      System.err.println("usage: graft.Verify <sfDir> <outDir> [<nameRegex>]")
+      sys.exit(2)
+    }
+    val env = Env.orExit()
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg (local iteration only): regex over query names
     val nameFilter = args.lift(2).map(_.r)
     // resume mode (local long-scale runs): skip queries whose output
     // already materialized — a killed run can be re-launched until the
     // catalog completes, then compared once
-    val resume = sys.env.get("SPARK_GRAFT_VERIFY_RESUME").contains("1")
-    def done(name: String) = resume &&
+    def done(name: String) = env.verifyResume &&
       java.nio.file.Files.exists(Paths.get(s"$outDir/$name/_SUCCESS"))
     // matched: in scope for this invocation (drives oracle_sql.json);
     // keep: actually (re)computed this run
     def matched(name: String) =
       nameFilter.forall(_.findFirstIn(name).isDefined)
     def keep(name: String) = matched(name) && !done(name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // partitions are sized to DATA, not cores, past sf1: at sf10 the
-      // 100M-row edge relations need ≥96 partitions to keep per-task
-      // sorts inside execution memory (found by the sf10 gate — 24
-      // partitions OOM'd q_g_pagerank); AQE coalesces small stages back.
-      // graft.core.Sizing computes the count from the sf dir's bytes
-      // (128 MiB of expanded input per partition, clamped to cores);
-      // SPARK_GRAFT_SHUFFLE_PARTITIONS stays as an explicit override.
-      .config("spark.sql.shuffle.partitions",
-        graft.core.Sizing.shufflePartitions(sfDir, cpus.toInt))
-      // shuffle scratch override only (SPARK_GRAFT_LOCAL_DIR; Sizing.localDir doc)
-      .config(graft.core.Sizing.localDir(sfDir).map("spark.local.dir" -> _).toMap)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession(Some(env.cpus), Some(sfDir))
     new java.io.File(outDir).mkdirs()
     val errors = scala.collection.mutable.LinkedHashMap[String, String]()
     SparkEntry.queries.foreach { case (name, fn) =>

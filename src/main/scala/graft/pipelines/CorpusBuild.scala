@@ -2,7 +2,8 @@ package graft.pipelines
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.GraftSession
+import graft.core.{Env, Tables}
 import graft.io.Io
 import graft.ml.Extras
 import graft.sim.Similarity
@@ -206,7 +207,7 @@ object CorpusBuild {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    val spark = PipelineSession.build()
+    val spark = GraftSession(Some(Env.orExit().cpus), Some(sfDir))
     val c = run(spark, sfDir, outDir)
     println(s"[corpus] raw=${c.raw} quality=${c.quality} lang=${c.langOk} " +
       s"lm=${c.lmOk} " +

@@ -2,7 +2,8 @@ package graft.pipelines
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.GraftSession
+import graft.core.{Env, Tables}
 import graft.io.Io
 import graft.ops.{Cleaning, Num, Relational}
 import graft.ml.{Models, Prep, Qda, Split}
@@ -16,21 +17,6 @@ import graft.ensemble.Ensemble
   *   runMain graft.pipelines.Experiment <sfDir> <outDir>   (EP2)
   *   runMain graft.pipelines.Tournament <sfDir> <outDir>   (EP3)
   */
-object PipelineSession {
-  def build(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val s = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.parquet.inferTimestampNTZ.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-}
 
 /** EP1 — ETL: raw survey-shaped data → cleaned, labeled, imputed X/Y
   * splits. Mirrors 1-1.data_processing → 1-2.labeling → basecode over the
@@ -86,7 +72,7 @@ object Etl {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    val spark = PipelineSession.build()
+    val spark = GraftSession(Some(Env.orExit().cpus), Some(sfDir))
     val out = run(spark, sfDir, outDir)
     println(s"[etl] wrote ${out.count()} rows to $outDir")
     spark.stop()
@@ -146,7 +132,7 @@ object Experiment {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    val spark = PipelineSession.build()
+    val spark = GraftSession(Some(Env.orExit().cpus), Some(sfDir))
     val out = run(spark, sfDir, outDir).collect()
     out.foreach(r => println(s"[experiment] best: $r"))
     spark.stop()
@@ -193,7 +179,7 @@ object Tournament {
 
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    val spark = PipelineSession.build()
+    val spark = GraftSession(Some(Env.orExit().cpus), Some(sfDir))
     val out = run(spark, sfDir, outDir)
     out.show(20, false)
     spark.stop()

@@ -13,7 +13,7 @@ import org.apache.spark.sql.types._
   */
 class SchemaSpec extends AnyFunSuite {
   private val spark = TestSpark.spark
-  private val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+  private val sfDir = core.Env.current.sfDir.getOrElse(s"${core.Env.TestData}/sf0.001")
 
   private val expected: Map[String, Seq[(String, DataType)]] = Map(
     "region" -> Seq("r_regionkey" -> IntegerType, "r_name" -> StringType),
@@ -62,6 +62,18 @@ class SchemaSpec extends AnyFunSuite {
     assert(fixed.schema("ts").dataType == TimestampType)
     assert(fixed.selectExpr("unix_micros(ts)").as[Long].collect().sorted
       === Array(1000000L, 2000000L))
+  }
+
+  test("registry: pack keys are disjoint, every oracle names a query, 238 queries") {
+    def shared(keySets: Seq[Set[String]]) =
+      keySets.flatten.groupBy(identity).collect { case (k, n) if n.size > 1 => k }
+    val inTwoPacks = shared(SparkEntry.packs.map(_.queries.keySet))
+    assert(inTwoPacks.isEmpty, s"queries in more than one pack: $inTwoPacks")
+    val oraclesInTwo = shared(SparkEntry.packs.map(_.oracles.keySet))
+    assert(oraclesInTwo.isEmpty, s"oracles in more than one pack: $oraclesInTwo")
+    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
+    assert(orphans.isEmpty, s"oracles without a query: $orphans")
+    assert(SparkEntry.queries.size == 238)
   }
 
   test("materializeCtes hints every CTE, skips WINDOW clauses and non-WITH statements") {
