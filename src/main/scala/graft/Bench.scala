@@ -86,7 +86,7 @@ object Bench {
     * query's last tasks don't get attributed to the next one.
     * LiveListenerBus is private[spark] — reflection, with a sleep
     * fallback (attribution skew of a few tasks is acceptable). */
-  private def drainListenerBus(spark: SparkSession): Unit =
+  private[graft] def drainListenerBus(spark: SparkSession): Unit =
     try {
       val sc = spark.sparkContext
       val bus = sc.getClass.getMethod("listenerBus").invoke(sc)

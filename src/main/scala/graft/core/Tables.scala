@@ -1,5 +1,8 @@
 package graft.core
 
+import scala.collection.concurrent.TrieMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -29,6 +32,15 @@ object Tables {
   def apply(spark: SparkSession, dir: String, name: String): DataFrame =
     normalizeTs(spark.read.parquet(s"$dir/$name.parquet"))
 
+  /** Identity of a table's files — name, length and modification time of
+    * each, from one listing. Rewriting the table changes it. */
+  def fingerprint(spark: SparkSession, dir: String, name: String): String = {
+    val p = new Path(s"$dir/$name.parquet")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
+      .sorted.mkString(",")
+  }
+
   /** Normalize whatever encoding `ts` arrived in to a plain TimestampType
     * column with event-time semantics. Covers all three generator eras:
     * long nanos, TIMESTAMP_NTZ micros, and already-correct timestamps. */
@@ -40,4 +52,23 @@ object Tables {
         df.withColumn("ts", col("ts").cast(TimestampType))
       case _ => df
     }
+}
+
+/** Process-scoped memo of state fitted from one table, keyed by data dir
+  * and served only while the table's files are unchanged
+  * ([[Tables.fingerprint]]): a table rewritten under the same path is
+  * refitted, never served the old fit. */
+final class TableMemo[V](table: String) {
+  private val memo = TrieMap.empty[String, (String, V)]
+
+  def apply(spark: SparkSession, dir: String)(build: => V): V = {
+    val fp = Tables.fingerprint(spark, dir, table)
+    memo.get(dir) match {
+      case Some((`fp`, v)) => v
+      case _ =>
+        val v = build
+        memo.put(dir, fp -> v)
+        v
+    }
+  }
 }

@@ -42,8 +42,13 @@ import graft.ml.HistTree.TreeModel
   * `depth` histogram aggregates whose input is the binned relation
   * melted ×nTrees (a map-side explode, no extra shuffle keys beyond
   * (tree, node, f, b, y)); histogram output is
-  * O(trees·nodes·d·bins·classes) — driver-tiny. Scoring is a codegen
-  * CASE cascade, no joins.
+  * O(trees·nodes·d·bins·classes) — driver-tiny. Scoring is a native
+  * leaf descent plus a literal-map lookup, no joins.
+  *
+  * [[fitTrees]] is the ONE histogram level loop of the package: a
+  * HistTree is its unweighted member (w ≡ 1, every feature a
+  * candidate), and [[fitCvWithTree]] fits a tree beside the forest in
+  * the same passes.
   *
   * Ref: cross-validation/wine_analysis.py:245-343 (tournament, rf
   * entry), src/models/random_forest.py (n_estimators/max_depth
@@ -52,13 +57,7 @@ import graft.ml.HistTree.TreeModel
 object Forest {
 
   case class ForestModel(trees: IndexedSeq[TreeModel], voteClasses: Seq[Int],
-                         nTrials: Int, seed: Int,
-                         /** per tree: node -> (Σ_y c², Σ_y c) weighted class
-                           * moments at that node, captured from the fit's
-                           * level histograms — the impurity-importance
-                           * inputs (empty for models built before r9). */
-                         nodeStats: IndexedSeq[Map[Int, (Long, Long)]] =
-                           IndexedSeq.empty) {
+                         nTrials: Int, seed: Int) {
     /** Per-tree predictions (codegen CASE cascades). */
     def treePredictExprs(arrCol: String): IndexedSeq[Column] =
       trees.map(_.predictExpr(arrCol))
@@ -128,22 +127,72 @@ object Forest {
 
   /** Fit `nFolds` forests at once — forest f trains on rows whose
     * `foldCol` ≠ f (K-fold CV; with nFolds = 1 and foldCol ≡ -1 this is
-    * the plain single fit). The fold index MELTS into the histogram key
-    * exactly like the tree index: one distributed aggregate per LEVEL
-    * covers every (fold, tree, node) — K·T trees cost the same number of
-    * driver round-trips as one (the fold dimension multiplies rows
-    * inside a map-side explode, never the number of passes). Bins come
-    * from each fold's TRAIN min/max (one grouped pass); bootstrap
-    * weights and mtry masks are fold-independent by construction, so
-    * they're computed once. Mirrors the oracle's forestCtes(cv = true)
-    * stage for stage. */
+    * the plain single fit). See [[fitTrees]]. */
   def fitCv(df: DataFrame, keyCol: String, arrCol: String, labelCol: String,
             foldCol: String, nFolds: Int, d: Int, nTrees: Int = 4,
             depth: Int = 3, bins: Int = 32, mtry: Int = 2, seed: Int = 42,
             nTrials: Int = 8, sampleCap: Long = 200000)
-      : IndexedSeq[ForestModel] = {
+      : IndexedSeq[ForestModel] =
+    fitTrees(df, Some(keyCol), arrCol, labelCol, foldCol, nFolds, d,
+      0 until nTrees, depth, bins, mtry, seed, nTrials, sampleCap)
+      .map(forest(_, nTrials, seed))
+
+  /** [[fitCv]] plus, per fold, the plain tree ([[HistTree.fitCv]]) of
+    * the same depth and bins, from the same passes: one min/max pass, one
+    * melt checkpoint and `depth` histogram collects fit both. */
+  def fitCvWithTree(df: DataFrame, keyCol: String, arrCol: String,
+                    labelCol: String, foldCol: String, nFolds: Int, d: Int,
+                    nTrees: Int = 4, depth: Int = 3, bins: Int = 32,
+                    mtry: Int = 2, seed: Int = 42, nTrials: Int = 8,
+                    sampleCap: Long = 200000)
+      : IndexedSeq[(TreeModel, ForestModel)] =
+    fitTrees(df, Some(keyCol), arrCol, labelCol, foldCol, nFolds, d,
+      Plain +: (0 until nTrees), depth, bins, mtry, seed, nTrials, sampleCap)
+      .map(ms => (ms.head, forest(ms.tail, nTrials, seed)))
+
+  private def forest(trees: IndexedSeq[TreeModel], nTrials: Int,
+                     seed: Int): ForestModel =
+    ForestModel(trees, trees.flatMap(_.leaves.values).distinct.sorted,
+      nTrials, seed)
+
+  /** Member id of the plain tree in [[fitTrees]]: every row weighs 1
+    * and every feature is a candidate at every node. */
+  private[ml] val Plain = -1
+
+  /** The one histogram level loop behind HistTree and Forest. Fits, for
+    * each fold f (trained on rows whose `foldCol` ≠ f), one tree per
+    * entry of `members`: [[Plain]], or forest tree t, whose rows weigh
+    * their bootstrap weight on stream t and whose nodes draw `mtry`
+    * features from md5("seed:t#node#f"). A member's streams depend only
+    * on t, so adding the plain member renumbers nothing. Returns per
+    * fold the models in `members` order. Mirrors the oracle's
+    * forestCtes(cv = true) stage for stage.
+    *
+    * The fold and member indices MELT into the histogram key: one
+    * distributed aggregate per LEVEL covers every (fold, member, node),
+    * so K·M trees cost the same number of driver round-trips as one
+    * (the melt multiplies rows inside a map-side explode, never the
+    * number of passes). Bins come from each fold's TRAIN min/max (one
+    * grouped pass, shared by every member); weights and mtry masks are
+    * fold-independent by construction. Past `sampleCap` train rows the
+    * per-level histogram reads the md5-thresholded row subsample of
+    * `keyCol` (the same rows for every member — split selection only;
+    * routing and leaf counts keep full data; see HistTree's object
+    * Scaladoc); without a `keyCol` the fit refuses instead.
+    *
+    * Every model carries full-data per-(node, class) counts for every
+    * node of every level: the terminal counts (derived from the last
+    * histogram, or one full-data pass on the subsampled route) summed
+    * up each node's path to the root. */
+  private[ml] def fitTrees(df: DataFrame, keyCol: Option[String],
+                           arrCol: String, labelCol: String, foldCol: String,
+                           nFolds: Int, d: Int, members: Seq[Int],
+                           depth: Int, bins: Int, mtry: Int = 2,
+                           seed: Int = 42, nTrials: Int = 8,
+                           sampleCap: Long = 200000)
+      : IndexedSeq[IndexedSeq[TreeModel]] = {
     require(sampleCap <= HistTree.ExactBound,
-      s"Forest: sampleCap must stay within the 2^53-exact bound " +
+      s"sampleCap must stay within the 2^53-exact bound " +
         s"${HistTree.ExactBound}")
     def el(i: Int): Column = element_at(col(arrCol), i + 1).cast("double")
     // per-fold TRAIN min/max + row count in ONE grouped pass
@@ -159,11 +208,12 @@ object Forest {
     val maxsK = Array.tabulate(nFolds, d)((f, i) => mm(f).getAs[Long](s"mx_$i"))
     val nK = (0 until nFolds).map(f => mm(f).getAs[Long]("n"))
     // weighted rows per tree sum to ~n (E[w] = 1), so HistTree's score
-    // ceiling applies per tree as-is; past sampleCap the per-level
-    // histogram reads the md5-thresholded ROW subsample (the same rows
-    // for every tree — split selection only; routing and leaf
-    // majorities keep full data). See HistTree's object Scaladoc.
+    // ceiling applies per member as-is
     val needSub = nK.exists(_ > sampleCap)
+    if (needSub) require(keyCol.nonEmpty,
+      "a fold's train size exceeds sampleCap — pass keyCol to enable " +
+        "md5-subsampled split selection (refusing rather than letting " +
+        "score ranking drift past the 2^53-exact range)")
 
     // per-fold bin expressions, dispatched on the materialized cvf column
     val b = (0 until d).map { i =>
@@ -173,37 +223,42 @@ object Forest {
           .otherwise(acc)
       }
     }
-    // melt the tree index in (map-side explode), weight each pair, drop
+    // melt the member index in (map-side explode), weight each pair, drop
     // w=0 — ONE relation feeds every level's histogram for ALL folds and
-    // ALL trees
-    val baseCols = Seq(col(keyCol), col("cvf"),
+    // ALL members
+    val baseCols = keyCol.map(col).toSeq ++ Seq(col("cvf"),
       col(labelCol).cast("int").as("y"), array(b: _*).as("b")) ++
       (if (!needSub) Nil
        else Seq((0 until nFolds).foldLeft(lit(false)) { (acc, f) =>
          val cond =
            if (nK(f) <= sampleCap) lit(true)
-           else HistTree.subsampleCond(keyCol, sampleCap, nK(f))
+           else HistTree.subsampleCond(keyCol.get, sampleCap, nK(f))
          when(col("cvf") === f, cond).otherwise(acc)
        }.as("insub")))
+    val w =
+      if (members.forall(_ == Plain)) lit(1L)
+      else when(col("tree") === Plain, lit(1L)).otherwise(
+        weightExpr(keyCol.get, col("tree"), seed, nTrials).cast("long"))
     val melted = folded.select(baseCols: _*)
-      .withColumn("tree", explode(array((0 until nTrees).map(lit): _*)))
-      .withColumn("w",
-        weightExpr(keyCol, col("tree"), seed, nTrials).cast("long"))
+      .withColumn("tree", explode(array(members.map(lit): _*)))
+      .withColumn("w", w)
       .filter(col("w") > 0)
       .localCheckpoint(true) // depth+1 aggregates read it; hashes are cheap
                              // but re-planning the explode each pass isn't
     if (needSub)
-      // realized subsample guard: per (fold, tree) the weighted
+      // realized subsample guard: per (fold, member) the weighted
       // histogram total is Σw over the subsample — measure and refuse
       // past the exact bound instead of drifting
       melted.filter(col("insub")).groupBy("cvf", "tree")
         .agg(sum(col("w")).as("ws")).collect().foreach { r =>
           require(r.getAs[Long]("ws") <= HistTree.ExactBound,
-            "Forest: realized split-selection subsample weight exceeds " +
-              "the 2^53-exact bound — lower sampleCap")
+            "realized split-selection subsample weight exceeds the " +
+              "2^53-exact bound — lower sampleCap")
         }
     def histSrc(c: DataFrame): DataFrame =
       if (needSub) c.filter(col("insub")) else c
+    def allowed(t: Int)(node: Int, f: Int): Boolean =
+      t == Plain || allowedFeatures(seed, t, node, d, mtry)(f)
 
     // `node` is a MATERIALIZED column advanced one projection per level
     // (each level's reassignment references the previous level's node
@@ -211,15 +266,13 @@ object Forest {
     // splits where re-inlining the cascade would grow exponentially
     // with depth × trees)
     var cur = melted.withColumn("node", lit(0))
-    val splits = Array.fill(nFolds, nTrees)(
+    val splits = Array.fill(nFolds, members.size)(
       scala.collection.mutable.ArrayBuffer.empty[HistTree.Split])
-    val stats = Array.fill(nFolds, nTrees)(
-      scala.collection.mutable.Map.empty[Int, (Long, Long)])
     var lastCounts: Array[((Int, Int), Int, Int, Int, Int, Long)] =
       Array.empty
     var lastBest = Map.empty[((Int, Int), Int), HistTree.Split]
     for (_ <- 0 until depth) {
-      // ONE distributed pass per level for every (fold, tree)
+      // ONE distributed pass per level for every (fold, member)
       val counts = histSrc(cur)
         .select(col("cvf"), col("tree"), col("node"), col("y"), col("w"),
           posexplode(col("b")))
@@ -227,27 +280,17 @@ object Forest {
           col("col").as("b"), col("y"))
         .agg(sum(col("w")).as("cnt"))
         .collect()
-        .map(r => (r.getAs[Int]("cvf"), r.getAs[Int]("tree"),
+        .map(r => ((r.getAs[Int]("cvf"), r.getAs[Int]("tree")),
           r.getAs[Int]("node"), r.getAs[Int]("f"), r.getAs[Int]("b"),
           r.getAs[Int]("y"), r.getAs[Long]("cnt")))
-      lastCounts = counts.map { case (cvf, t, n, ff, bb, y, c) =>
-        ((cvf, t), n, ff, bb, y, c) }
+      lastCounts = counts
       var lvl: Column = col("node")
       val bestAcc = Map.newBuilder[((Int, Int), Int), HistTree.Split]
-      for (f <- 0 until nFolds; t <- 0 until nTrees) {
+      for (f <- 0 until nFolds; (t, mi) <- members.zipWithIndex) {
         val mine = counts.collect {
-          case (`f`, `t`, n, ff, bb, y, c) => (n, ff, bb, y, c) }
-        // per-node weighted class moments (Σc², Σc) for impurity
-        // importance — feature 0's bins partition each node's rows, so
-        // its per-class bin sums ARE the node's class counts (the
-        // oracle's fnt CTE computes the same from fa$l directly)
-        mine.filter(_._2 == 0).groupBy(_._1).foreach { case (node, rows) =>
-          val byY = rows.groupBy(_._4).map { case (_, rs) => rs.map(_._5).sum }
-          stats(f)(t)(node) = (byY.map(c => c * c).sum, byY.sum)
-        }
-        val best = HistTree.selectSplits(mine, bins,
-          (node, feat) => allowedFeatures(seed, t, node, d, mtry)(feat))
-        splits(f)(t) ++= best
+          case ((`f`, `t`), n, ff, bb, y, c) => (n, ff, bb, y, c) }
+        val best = HistTree.selectSplits(mine, bins, allowed(t))
+        splits(f)(mi) ++= best
         best.foreach { s =>
           bestAcc += (((f, t), s.node) -> s)
           lvl = when(col("cvf") === f && col("tree") === t &&
@@ -260,37 +303,47 @@ object Forest {
       lastBest = bestAcc.result()
       cur = cur.withColumn("node", lvl)
     }
-    // weighted leaf majorities per (fold, tree, node), ties to smallest
-    // label. Full-data split selection: the terminal counts are exact
-    // cumulative sums of the LAST level's histogram on each node's
-    // chosen split (HistTree.deriveLeafCounts) — the dedicated final
-    // assignment pass over `melted` is rework, and it was the fit's
-    // single biggest pass (the d-wide explode rides every level's
-    // histogram anyway). Subsampled route keeps the pass: its histogram
-    // covers only the subsample, leaf majorities must use full weights.
-    val leafCounts: Array[(Int, Int, Int, Int, Long)] =
+    // weighted terminal counts per (fold, member, node, class).
+    // Full-data split selection: they are exact cumulative sums of the
+    // LAST level's histogram on each node's chosen split
+    // (HistTree.deriveLeafCounts) — a dedicated final pass over `melted`
+    // would be rework, and was the fit's single biggest pass. The
+    // subsampled route keeps the pass: its histogram covers only the
+    // subsample, while counts must use full weights.
+    val terminal: Array[((Int, Int), Int, Int, Long)] =
       // depth == 0: no level histograms to derive from — groupBy fallback
       if (!needSub && depth > 0)
         HistTree.deriveLeafCounts[(Int, Int)](lastCounts,
           lastBest.map { case (k, s) => k -> (s.feature, s.bin) })
-          .map { case ((cvf, t), node, y, c) => (cvf, t, node, y, c) }
       else cur
         .groupBy("cvf", "tree", "node", "y").agg(sum(col("w")).as("c"))
         .collect()
-        .map(r => (r.getAs[Int]("cvf"), r.getAs[Int]("tree"),
+        .map(r => ((r.getAs[Int]("cvf"), r.getAs[Int]("tree")),
           r.getAs[Int]("node"), r.getAs[Int]("y"), r.getAs[Long]("c")))
+    val byModel = terminal.groupBy(_._1)
     (0 until nFolds).map { f =>
-      val trees = (0 until nTrees).map { t =>
-        val leaves = leafCounts.collect { case (`f`, `t`, n, y, c) => (n, y, c) }
-          .groupBy(_._1).map { case (node, rows) =>
-            node -> rows.minBy { case (_, y, c) => (-c, y) }._2
-          }
-        TreeModel(splits(f)(t).toSeq, leaves, minsK(f), maxsK(f), bins)
-      }
-      val voteClasses = trees.flatMap(_.leaves.values).distinct.sorted
-      ForestModel(trees, voteClasses, nTrials, seed,
-        (0 until nTrees).map(t => stats(f)(t).toMap))
+      members.zipWithIndex.map { case (t, mi) =>
+        val term = byModel.getOrElse((f, t), Array.empty)
+          .groupBy(_._2).map { case (node, rs) =>
+            node -> rs.map(r => r._3 -> r._4).toMap }
+        TreeModel(splits(f)(mi).toSeq, HistTree.majorities(term),
+          minsK(f), maxsK(f), bins, rollUp(term))
+      }.toIndexedSeq
     }
+  }
+
+  /** Class counts of every node from the terminal ones: each row ends at
+    * exactly one terminal, so a node's rows are those of the terminals
+    * below it. */
+  private def rollUp(term: Map[Int, Map[Int, Long]])
+      : Map[Int, Map[Int, Long]] = {
+    def path(n: Int): Seq[Int] =
+      if (n == 0) Seq(0) else n +: path((n - 1) / 2)
+    term.toSeq.flatMap { case (n, byY) =>
+        for (a <- path(n); (y, c) <- byY) yield (a, y, c) }
+      .groupMapReduce(r => (r._1, r._2))(_._3)(_ + _)
+      .groupMap(_._1._1) { case ((_, y), c) => y -> c }
+      .map { case (n, ys) => n -> ys.toMap }
   }
 
   /** Per-split weighted impurity decrease — sklearn's impurity-based
@@ -307,7 +360,8 @@ object Forest {
   def importanceRows(m: ForestModel): Seq[(Int, Int, Int, Double)] =
     m.trees.zipWithIndex.flatMap { case (t, ti) =>
       t.splits.map { sp =>
-        val (st, tn) = m.nodeStats(ti)(sp.node)
+        val cs = t.classCounts(sp.node).values
+        val (st, tn) = (cs.map(c => c * c).sum, cs.sum)
         (ti, sp.node, sp.feature,
           sp.score - st.toDouble / tn.toDouble)
       }

@@ -41,9 +41,6 @@ object IsoForest {
   case class IModel(splits: Seq[ISplit], leafSizes: Seq[(Int, Int, Long)],
                     trees: Int, depth: Int)
 
-  private def levelOf(node: Int): Int =
-    31 - Integer.numberOfLeadingZeros(node + 1)
-
   private def md5Long(md: java.security.MessageDigest, s: String): Long =
     java.lang.Long.parseLong(graft.text.TextOps.md5Hex(md, s).take(8), 16)
 
@@ -129,7 +126,7 @@ object IsoForest {
       .crossJoin(broadcast(treesDf))
       .withColumn("node", lit(0))
     for (l <- 0 until m.depth) {
-      val lvl = m.splits.filter(s => levelOf(s.node) == l)
+      val lvl = m.splits.filter(s => HistTree.levelOf(s.node) == l)
       if (lvl.nonEmpty) cur = route(cur, lvl.toDF())
     }
     val sizesDf = m.leafSizes.toDF("tree", "node", "m")

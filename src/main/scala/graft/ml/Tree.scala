@@ -42,6 +42,10 @@ import org.apache.spark.sql.functions._
   * realized subsample size is measured and REFUSED past the 2^53 bound
   * rather than allowed to drift.
   *
+  * The level loop itself is shared with Forest: a tree is the
+  * unweighted, all-features member of [[Forest.fitTrees]], so one call
+  * can fit trees and forests over the same rows in the same passes.
+  *
   * Ref: src/models/decision_tree.py:15-34 (DecisionTreeClassifier in the
   * reference tournament); assignment_report.md dt row (parity vs the
   * published accuracy is WineParitySpec's job — THIS form's job is exact
@@ -54,8 +58,22 @@ object HistTree {
   case class Split(node: Int, feature: Int, bin: Int,
                    nLeft: Long, nRight: Long, score: Double)
 
+  /** `classCounts`: node -> class -> training rows through that node
+    * (bootstrap-weighted for a forest tree), for every node of every
+    * level; empty for a hand-built model. */
   case class TreeModel(splits: Seq[Split], leaves: Map[Int, Int],
-                       mins: Array[Long], maxs: Array[Long], bins: Int) {
+                       mins: Array[Long], maxs: Array[Long], bins: Int,
+                       classCounts: Map[Int, Map[Int, Long]] = Map.empty) {
+    /** The first `depth` levels of this tree. Level-wise greedy growth
+      * makes the prefix the depth-`depth` fit itself, and its leaves'
+      * class counts are already in `classCounts`. */
+    def prefix(depth: Int): TreeModel = {
+      val kept = splits.filter(sp => levelOf(sp.node) < depth)
+      val split = kept.map(_.node).toSet
+      val terminal = classCounts.filter { case (n, _) =>
+        levelOf(n) <= depth && !split(n) }
+      copy(splits = kept, leaves = majorities(terminal))
+    }
     /** The fitted split/grid tables as one native-descent spec — the
       * whole tree is ONE catalyst node
       * ([[graft.expressions.TreeLeafDescend]]; bit-identical to the
@@ -78,6 +96,14 @@ object HistTree {
       if (leaves.isEmpty) lit(null).cast("int")
       else element_at(typedlit(leaves), leafExpr(arrCol))
   }
+
+  /** Heap level of a node: 0 for the root, 1 for nodes 1-2, ... */
+  def levelOf(node: Int): Int = 31 - Integer.numberOfLeadingZeros(node + 1)
+
+  /** Majority class per node, ties to the smallest label. */
+  private[ml] def majorities(counts: Map[Int, Map[Int, Long]]): Map[Int, Int] =
+    counts.map { case (node, byY) =>
+      node -> byY.minBy { case (y, c) => (-c, y) }._1 }
 
   /** Fixed-width bin of integer-valued feature i: floor(((x − min)·B) /
     * (max − min + 1)) — products stay exact in double, one IEEE division,
@@ -121,10 +147,12 @@ object HistTree {
 
   /** Fit `nFolds` trees at once — tree f trains on rows whose `foldCol`
     * ≠ f (with nFolds = 1 and foldCol ≡ -1 this is the plain single
-    * fit). The fold index melts into the histogram key, so K trees cost
-    * the same number of per-level driver round-trips as one; bins come
-    * from each fold's TRAIN min/max. Mirrors the fold-aware oracle
-    * chain (R9Queries.treeCtes cv = true).
+    * fit). This is the unweighted case of the one level loop,
+    * [[Forest.fitTrees]]: every row weighs 1 and every feature is a
+    * candidate at every node. The fold index melts into the histogram
+    * key, so K trees cost the same number of per-level driver
+    * round-trips as one; bins come from each fold's TRAIN min/max.
+    * Mirrors the fold-aware oracle chain (R9Queries.treeCtes cv = true).
     *
     * When a fold's train count exceeds `sampleCap`, the per-level
     * HISTOGRAM (split selection) reads only the md5-thresholded
@@ -134,123 +162,9 @@ object HistTree {
   def fitCv(df: DataFrame, arrCol: String, labelCol: String,
             foldCol: String, nFolds: Int, d: Int,
             depth: Int = 3, bins: Int = 32, keyCol: Option[String] = None,
-            sampleCap: Long = 200000): IndexedSeq[TreeModel] = {
-    require(sampleCap <= ExactBound,
-      s"HistTree: sampleCap must stay within the 2^53-exact bound $ExactBound")
-    def el(i: Int): Column = element_at(col(arrCol), i + 1).cast("double")
-    val folded = df
-      .withColumn("cvf", explode(array((0 until nFolds).map(lit): _*)))
-      .filter(col(foldCol) =!= col("cvf"))
-    val mmAggs = (0 until d).flatMap(i =>
-      Seq(min(el(i).cast("long")).as(s"mn_$i"),
-        max(el(i).cast("long")).as(s"mx_$i"))) :+ count(lit(1)).as("n")
-    val mm = folded.groupBy("cvf").agg(mmAggs.head, mmAggs.tail: _*)
-      .collect().map(r => r.getAs[Int]("cvf") -> r).toMap
-    val minsK = Array.tabulate(nFolds, d)((f, i) => mm(f).getAs[Long](s"mn_$i"))
-    val maxsK = Array.tabulate(nFolds, d)((f, i) => mm(f).getAs[Long](s"mx_$i"))
-    val nK = (0 until nFolds).map(f => mm(f).getAs[Long]("n"))
-    val needSub = nK.exists(_ > sampleCap)
-    if (needSub) require(keyCol.nonEmpty,
-      "HistTree: a fold's train size exceeds sampleCap — pass keyCol to " +
-        "enable md5-subsampled split selection (refusing rather than " +
-        "letting score ranking drift past the 2^53-exact range)")
-
-    val b = (0 until d).map { i =>
-      (0 until nFolds).foldLeft(lit(null).cast("int")) { (acc, f) =>
-        when(col("cvf") === f, binExprs(arrCol, minsK(f), maxsK(f), bins)(i))
-          .otherwise(acc)
-      }
-    }
-    val binned0 = folded.select(col("cvf"),
-      col(labelCol).cast("int").as("y"), array(b: _*).as("b"))
-    val binned =
-      if (!needSub) binned0
-      else {
-        val insub = (0 until nFolds).foldLeft(lit(false)) { (acc, f) =>
-          val cond =
-            if (nK(f) <= sampleCap) lit(true)
-            else subsampleCond(keyCol.get, sampleCap, nK(f))
-          when(col("cvf") === f, cond).otherwise(acc)
-        }
-        val withSub = folded.select(col("cvf"),
-          col(labelCol).cast("int").as("y"), array(b: _*).as("b"),
-          insub.as("insub"))
-        // measure the realized subsample; refuse past the exact bound
-        withSub.filter(col("insub")).groupBy("cvf")
-          .agg(count(lit(1)).as("ns")).collect().foreach { r =>
-            require(r.getAs[Long]("ns") <= ExactBound,
-              "HistTree: realized split-selection subsample exceeds the " +
-                "2^53-exact bound — lower sampleCap")
-          }
-        withSub
-      }
-    def histSrc(c: DataFrame): DataFrame =
-      if (needSub) c.filter(col("insub")) else c
-
-    // `node` advances one materialized projection per level (attribute
-    // reference, not expression re-inlining — linear plan growth)
-    var cur = binned.withColumn("node", lit(0))
-    val splits = Array.fill(nFolds)(
-      scala.collection.mutable.ArrayBuffer.empty[Split])
-    var lastCounts: Array[(Int, Int, Int, Int, Int, Long)] = Array.empty
-    var lastBest = Map.empty[(Int, Int), Split]
-    for (_ <- 0 until depth) {
-      // ONE distributed pass: per-(fold, node, feature, bin, class)
-      val counts = histSrc(cur)
-        .select(col("cvf"), col("node"), col("y"), posexplode(col("b")))
-        .groupBy(col("cvf"), col("node"), col("pos").as("f"),
-          col("col").as("b"), col("y"))
-        .agg(count(lit(1)).as("cnt"))
-        .collect()
-        .map(r => (r.getAs[Int]("cvf"), r.getAs[Int]("node"),
-          r.getAs[Int]("f"), r.getAs[Int]("b"), r.getAs[Int]("y"),
-          r.getAs[Long]("cnt")))
-      lastCounts = counts
-      var lvl: Column = col("node")
-      val bestAcc = Map.newBuilder[(Int, Int), Split]
-      for (f <- 0 until nFolds) {
-        val mine = counts.collect { case (`f`, n, ff, bb, y, c) =>
-          (n, ff, bb, y, c) }
-        val best = selectSplits(mine, bins)
-        splits(f) ++= best
-        best.foreach { s =>
-          bestAcc += ((f, s.node) -> s)
-          lvl = when(col("cvf") === f && col("node") === s.node,
-            when(element_at(col("b"), s.feature + 1) <= s.bin,
-              lit(2 * s.node + 1)).otherwise(lit(2 * s.node + 2)))
-            .otherwise(lvl)
-        }
-      }
-      lastBest = bestAcc.result()
-      cur = cur.withColumn("node", lvl)
-    }
-    // leaf majorities (ties to the smallest label). When split selection
-    // read FULL data, the final level's histogram already contains every
-    // node's per-class counts — the terminal counts are its cumulative
-    // sums on the chosen split, so the former final assignment pass is
-    // pure rework (one less full-data pass; identical integers). The
-    // subsampled route keeps the pass: there the histogram covers only
-    // the subsample while leaf majorities must use full data.
-    val leafCounts: Array[(Int, Int, Int, Long)] =
-      // depth == 0 runs no level loop, so lastCounts is empty and the
-      // derived form would return no leaves (a model that abstains on
-      // every row); the groupBy pass still yields the root majority
-      if (!needSub && depth > 0)
-        deriveLeafCounts[Int](lastCounts,
-          lastBest.map { case (k, s) => k -> (s.feature, s.bin) })
-      else cur
-        .groupBy("cvf", "node", "y").agg(count(lit(1)).as("c"))
-        .collect()
-        .map(r => (r.getAs[Int]("cvf"), r.getAs[Int]("node"),
-          r.getAs[Int]("y"), r.getAs[Long]("c")))
-    (0 until nFolds).map { f =>
-      val leaves = leafCounts.collect { case (`f`, n, y, c) => (n, y, c) }
-        .groupBy(_._1).map { case (node, rows) =>
-          node -> rows.minBy { case (_, y, c) => (-c, y) }._2
-        }
-      TreeModel(splits(f).toSeq, leaves, minsK(f), maxsK(f), bins)
-    }
-  }
+            sampleCap: Long = 200000): IndexedSeq[TreeModel] =
+    Forest.fitTrees(df, keyCol, arrCol, labelCol, foldCol, nFolds, d,
+      Seq(Forest.Plain), depth, bins, sampleCap = sampleCap).map(_.head)
 
   /** Terminal per-class counts derived from the LAST level's histogram:
     * for a node split at that level, the left child's class counts are

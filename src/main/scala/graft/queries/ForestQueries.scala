@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{TableMemo, Tables}
 import graft.ml.Forest
 
 /** L4 in the hash-exact oracle club: the reference's HEADLINE model —
@@ -40,20 +40,20 @@ object ForestQueries extends QueryPack {
         floor(element_at(col("embedding"), i + 1).cast("double") * lit(1e6)
           + lit(0.5)).cast("double")): _*).as("x"))
 
-  /** Process-scoped memo of the fitted forest, keyed by data dir — the
-    * same fitted-parameter discipline as R9Queries' tournament memo:
+  /** Process-scoped memo of the fitted forest, keyed by data dir and the
+    * embeddings files — the same fitted-parameter discipline as
+    * R9Queries' tournament memo:
     * FIVE catalog queries (q_l_rf_params/confusion/oob/importance and
     * q_m14_perm_importance) fit the IDENTICAL model, and a ForestModel
     * is driver-side data by construction (split tables + leaf
     * majorities, O(trees·2^depth) scalars), so caching it is caching
     * fitted parameters, not row data. Each query still re-reads and
     * re-scores its own data. */
-  private val modelMemo = scala.collection.concurrent.TrieMap
-    .empty[String, Forest.ForestModel]
+  private val modelMemo = new TableMemo[Forest.ForestModel]("embeddings")
 
   private[queries] def fitted(s: SparkSession, d: String): (DataFrame, Forest.ForestModel) = {
     val base = frame(s, d).localCheckpoint(true)
-    (base, modelMemo.getOrElseUpdate(d,
+    (base, modelMemo(s, d)(
       Forest.fit(base, "vec_id", "x", "y", D, nTrees = T,
         depth = Depth, bins = Bins, mtry = Mtry, seed = Seed,
         nTrials = NTrials)))

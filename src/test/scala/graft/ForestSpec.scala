@@ -53,8 +53,8 @@ class ForestSpec extends AnyFunSuite {
     val rows = Forest.importanceRows(m)
     assert(rows.nonEmpty)
     assert(rows.forall(_._4 > 0), "strict improvement => positive decrease")
-    m.trees.zipWithIndex.foreach { case (t, ti) =>
-      t.splits.foreach(sp => assert(m.nodeStats(ti).contains(sp.node))) }
+    m.trees.foreach(t =>
+      t.splits.foreach(sp => assert(t.classCounts.contains(sp.node))))
     val byF = rows.groupBy(_._3).view.mapValues(_.map(_._4).sum).toMap
     val tot = byF.values.sum
     val informative = (byF.getOrElse(0, 0.0) + byF.getOrElse(2, 0.0)) / tot
